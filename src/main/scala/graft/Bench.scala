@@ -316,7 +316,8 @@ object Bench {
   private[graft] final case class GateResult(
       total: Double, totalClean: Double, value: Double, basis: String,
       canaryScale: Double, canaryAgreement: Double,
-      passWeather: Seq[Double], keptIdx: Seq[Int])
+      passWeather: Seq[Double], keptIdx: Seq[Int],
+      normalized: Option[Double])
 
   /** The pure demotion math (VERDICT r14 #1: unit-testable so the
     * logic survives refactors without 27-minute experiments): given
@@ -350,7 +351,11 @@ object Bench {
       if (!distorted) "trimmed_mean"
       else if (totalClean <= total) "clean_pass_median"
       else "trimmed_mean_weathered_min"
-    GateResult(total, totalClean, value, basis, cScale, cAgree, weights, kept)
+    // value_normalized divides one canary scale out of the total, which
+    // means nothing once the canary regimes disagree: then it is absent
+    // (null, "normalized_valid": false), not a number.
+    val normalized = if (cAgree > AgreementBar) None else Some(total / cScale)
+    GateResult(total, totalClean, value, basis, cScale, cAgree, weights, kept, normalized)
   }
 
   // ---- boot-aware canary ref resolution ----------------------------
@@ -618,15 +623,17 @@ object Bench {
     // max/min of the three ratios. canary_scale > 1 = this box/run is
     // SLOWER than the pinned reference; value_normalized divides that
     // weather out of "value" — a DIAGNOSTIC that is only meaningful
-    // when canary_agreement is near 1 (the regimes moved together).
-    // The raw "value" stays the gate metric always.
+    // when canary_agreement is near 1 (the regimes moved together), so
+    // gateOf drops it above [[AgreementBar]]. The raw "value" stays the
+    // gate metric always.
     val canaryScales = canaryMed.toSeq.sortBy(_._1).collect {
       case (n, v) if refs.contains(n) && refs(n) > 0 => n -> v / refs(n)
     }
     // Weather-proof gate metric (VERDICT r13 #1): all demotion math is
     // the pure gateOf (unit-tested in BenchSpec) — see [[AgreementBar]].
     val gate = gateOf(timings, refs, liveCanaries, headlineNames)
-    val normalized = gate.total / gate.canaryScale
+    val normalized = gate.normalized.fold("null")(jnum) +
+      s""","normalized_valid":${gate.normalized.isDefined}"""
     val nonPlan = (kv: (String, Double)) =>
       SideEffectQueries(kv._1) || kv._1.startsWith("shared:") ||
         kv._1.startsWith("canary:")
@@ -634,7 +641,7 @@ object Bench {
     // own stability evidence (VERDICT r11 #1); canary_scale is only
     // trustworthy when these are small relative to the medians
     val canarySpread = spread.filter(_._1.startsWith("canary:"))
-    val line = s"""{"metric":"total","value":${jnum(gate.value)},"gate_basis":"${gate.basis}","agreement_bar":${jnum(AgreementBar)},"scale_bar":${jnum(ScaleBar)},"extra_passes":$extraPasses,"pass_weather":${gate.passWeather.map(jnum).mkString("[", ",", "]")},"passes_kept":${gate.keptIdx.size},"value_trimmed":${jnum(gate.total)},"value_clean_pass":${jnum(gate.totalClean)},"value_min":${jnum(totalMin)},"unit":"sec","passes":${timings.size},"cpus":$cpus,"boot_id":${jstr(bootId)},"canary_ref_source":${jstr(refSource)},"canary":${jmap(canaryMed)},"canary_ref":${jmap(refs.toSeq.sorted)},"canary_scales":${jmap(canaryScales)},"canary_scale":${jnum(gate.canaryScale)},"canary_agreement":${jnum(gate.canaryAgreement)},"canary_spread":${jmap(canarySpread)},"value_normalized":${jnum(normalized)},"queries":${jmap(plans)},"queries_min":${jmap(mins.filterNot(nonPlan))},"queries_spread":${jmap(spread.filterNot(nonPlan))},"shared_builds":${jmap(sharedMed)},"side_effect_queries":${jmap(sideEff)},"errors":$es,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${jnum(gate.value)},"gate_basis":"${gate.basis}","agreement_bar":${jnum(AgreementBar)},"scale_bar":${jnum(ScaleBar)},"extra_passes":$extraPasses,"pass_weather":${gate.passWeather.map(jnum).mkString("[", ",", "]")},"passes_kept":${gate.keptIdx.size},"value_trimmed":${jnum(gate.total)},"value_clean_pass":${jnum(gate.totalClean)},"value_min":${jnum(totalMin)},"unit":"sec","passes":${timings.size},"cpus":$cpus,"boot_id":${jstr(bootId)},"canary_ref_source":${jstr(refSource)},"canary":${jmap(canaryMed)},"canary_ref":${jmap(refs.toSeq.sorted)},"canary_scales":${jmap(canaryScales)},"canary_scale":${jnum(gate.canaryScale)},"canary_agreement":${jnum(gate.canaryAgreement)},"canary_spread":${jmap(canarySpread)},"value_normalized":$normalized,"queries":${jmap(plans)},"queries_min":${jmap(mins.filterNot(nonPlan))},"queries_spread":${jmap(spread.filterNot(nonPlan))},"shared_builds":${jmap(sharedMed)},"side_effect_queries":${jmap(sideEff)},"errors":$es,"sf":"$sfDir"}"""
     // The full per-query line outgrew the driver's 2000-char stdout tail
     // window at ~136 queries (r3/r4/r5 all recorded parsed:null because
     // the line's HEAD — "{"metric":... — fell outside the window). So:
@@ -660,7 +667,7 @@ object Bench {
       catch { case NonFatal(e) => System.err.println(s"bench detail write failed ($p): $e") }
     println(line)
     spark.stop()
-    val compact = s"""{"metric":"total","value":${jnum(gate.value)},"gate_basis":"${gate.basis}","unit":"sec","passes":${timings.size},"canary_scale":${jnum(gate.canaryScale)},"canary_agreement":${jnum(gate.canaryAgreement)},"value_normalized":${jnum(normalized)},"n_queries":${plans.size},"n_errors":${errors.size},"sf":"$sfDir","detail":"$detailPath"}"""
+    val compact = s"""{"metric":"total","value":${jnum(gate.value)},"gate_basis":"${gate.basis}","unit":"sec","passes":${timings.size},"canary_scale":${jnum(gate.canaryScale)},"canary_agreement":${jnum(gate.canaryAgreement)},"value_normalized":$normalized,"n_queries":${plans.size},"n_errors":${errors.size},"sf":"$sfDir","detail":"$detailPath"}"""
     println(compact)
     if (errors.nonEmpty) sys.exit(1)
   }

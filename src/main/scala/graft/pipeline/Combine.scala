@@ -13,10 +13,11 @@ import org.apache.spark.sql.functions._
   * single-row result that is deterministic at any parallelism.
   *
   * This is a single-reducer op by definition (one output string), so it
-  * is only for human-consumable final output; at 100 TB you keep results
-  * AS A TABLE (chunk_id, result) and write with
-  * `df.write.partitionBy(...)`, which [[LlmMap.mapChunks]] already
-  * supports. combineAll exists for reference-pipeline compatibility.
+  * is only for human-consumable final output; at 100 TB you keep the
+  * output of [[LlmMap.mapChunks]] AS A TABLE (the chunk columns plus
+  * result, in no particular row order) and write it with
+  * `df.write.partitionBy(...)`. combineAll exists for reference-pipeline
+  * compatibility.
   */
 object Combine {
   /** One row: (combined: String) — results joined in chunk order with no

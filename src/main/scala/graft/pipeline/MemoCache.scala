@@ -64,6 +64,10 @@ object MemoCache {
     * returned plan is consumed), appended to the memo, and unioned with
     * the hits. Appending a duplicate key on a concurrent re-run is
     * harmless: hits are deduped on read.
+    *
+    * A failed call costs only its own chunk: every successful miss is
+    * appended first, then a [[ChunkFailures]] names the failed chunk ids,
+    * so a re-run calls the model for those chunks alone.
     */
   def mapChunksWithMemo(chunks: DataFrame, client: ModelClient,
                         prompt: String, model: String,
@@ -75,14 +79,21 @@ object MemoCache {
     val hits = keyed.join(memo, Seq("key"))
       .select(col("chunk_id"), col("text"), col("result"))
     val misses = keyed.join(memo, Seq("key"), "left_anti")
-    val fresh = LlmMap.mapChunks(misses, client, prompt)
+    val fresh = LlmMap.mapChunksOrErrors(misses, client, prompt)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Chunker.registerForCleanup(fresh)
     // The append is the materializing action that populates `fresh`'s
     // cache; everything downstream reuses it instead of re-calling the
     // model.
-    fresh.select(col("key"), col("result"))
+    val ok = col(LlmMap.ErrorCol).isNull
+    fresh.filter(ok).select(col("key"), col("result"))
       .write.mode("append").parquet(memoPath)
+    val failed = fresh.filter(!ok).select(col("chunk_id").cast("long"), col(LlmMap.ErrorCol))
+      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+    if (failed.nonEmpty) {
+      fresh.unpersist()
+      throw new ChunkFailures(failed.map(_._1).toSeq, failed.head._2)
+    }
 
     hits.unionByName(fresh.select(col("chunk_id"), col("text"), col("result")))
   }
@@ -133,3 +144,13 @@ object MemoCache {
     ()
   }
 }
+
+/** Thrown by [[MemoCache.mapChunksWithMemo]] after it has kept the paid
+  * work: the model calls for `chunkIds` failed, every other miss is in
+  * the memo. `firstError` is the lowest failed chunk's exception.
+  */
+final class ChunkFailures(val chunkIds: Seq[Long], val firstError: String)
+  extends RuntimeException(
+    s"model calls failed for ${chunkIds.size} chunk(s), chunk_id " +
+      s"${chunkIds.mkString(", ")}; the other chunks' results are in the memo. " +
+      s"First error: $firstError")

@@ -69,6 +69,19 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.barBlown(t, refs, cs))
   }
 
+  test("value_normalized: published only while the canary regimes agree") {
+    // agreement 1, uniform 2x load: the diagnostic divides it out
+    val calm = Bench.gateOf(Seq.fill(5)(pass(2.0, 4.0)), refs, cs, Seq("q"))
+    assert(calm.canaryAgreement <= Bench.AgreementBar)
+    assert(calm.normalized.contains(2.0))
+    // one regime re-clocked 2x: agreement 2.0 > bar, so no number
+    val split = Bench.gateOf(Seq.fill(5)(cs.map(_ -> 1.0).toMap ++
+      Map("canary:sort" -> 2.0, "q" -> 2.0)), refs, cs, Seq("q"))
+    assert(split.canaryAgreement > Bench.AgreementBar)
+    assert(split.normalized.isEmpty)
+    assert(split.value == 2.0, "the gate value itself is still reported")
+  }
+
   test("demotion to clean_pass_median: loaded passes excluded, value = calm median") {
     // 3 of 5 passes loaded 3x (canaries AND the query): bar blows,
     // calm passes {0,1} kept, median over them = the clean 2.0

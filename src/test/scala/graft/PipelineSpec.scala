@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, concat, length, lit, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.expressions.TokenCount
@@ -153,6 +154,78 @@ class LlmMapSpec extends AnyFunSuite {
     assert(CountingClient.calls.get() == 1)
   }
 
+  test("exactly one call per chunk under a filter on result") {
+    // A deterministic UDF let the optimizer evaluate the call twice for
+    // every kept row: once in the pushed-down filter, once in the
+    // projection that materializes `result`.
+    // Not a local relation: the optimizer would evaluate a UDF over one
+    // on the driver, once, and hide the duplicate.
+    val chunks = spark.range(0, 40, 1, 4).select(col("id").as("chunk_id"),
+      concat(lit("c"), col("id"), when(col("id") % 3 === 0, lit(" keep")).otherwise(lit("")))
+        .as("text"))
+    val kept = LlmMap.mapChunks(chunks, CountingClient("keep"), "p")
+      .filter(length(col("result")) > 0)
+    CountingClient.reset()
+    assert(kept.count() == 14)
+    assert(CountingClient.calls.get() == 40)
+    CountingClient.reset()
+    assert(kept.select("result").as[String].collect().forall(_.endsWith("keep")))
+    assert(CountingClient.calls.get() == 40)
+  }
+
+  test("all calls of a single-task stage are in flight together") {
+    val chunks = (0L until 8L).map(i => (i, s"c$i")).toDF("chunk_id", "text").coalesce(1)
+    assert(chunks.rdd.getNumPartitions == 1)
+    LatchClient.reset(8)
+    val out = LlmMap.mapChunks(chunks, LatchClient(), "p")
+      .select("result").as[String].collect()
+    assert(out.length == 8)
+    assert(out.forall(_ == "together"),
+      "each call waits for all 8 to start; one task ran them one at a time")
+  }
+
+  test("a failed call fails the job with the client's exception; in-flight calls are cancelled") {
+    BlockingClient.interrupted.set(0)
+    val chunks = (0L until 8L).map(i => (i, if (i == 5) "poison" else s"c$i"))
+      .toDF("chunk_id", "text").coalesce(1)
+    val t0 = System.nanoTime()
+    val e = intercept[org.apache.spark.SparkException] {
+      LlmMap.mapChunks(chunks, BlockingClient("poison"), "p").collect()
+    }
+    assert((System.nanoTime() - t0) / 1e9 < 20, "the job waited out the blocked calls")
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+      c.getMessage == "poisoned chunk"), s"cause chain: $causes")
+    val deadline = System.nanoTime() + 5e9.toLong
+    while (BlockingClient.interrupted.get < 7 && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(BlockingClient.interrupted.get >= 7, "outstanding calls were not cancelled")
+  }
+
+  test("a killed task cancels the calls it has in flight") {
+    BlockingClient.started.set(0)
+    BlockingClient.interrupted.set(0)
+    val chunks = (0L until 8L).map(i => (i, s"c$i")).toDF("chunk_id", "text").coalesce(1)
+    val sc = spark.sparkContext
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val job = new Thread(() => {
+      // no thread interrupt: the task must notice the kill while it waits
+      sc.setJobGroup("llmmap-kill-spec", "kill spec", interruptOnCancel = false)
+      try LlmMap.mapChunks(chunks, BlockingClient("none"), "p").collect()
+      catch { case e: Throwable => failure.set(e) }
+      finally sc.clearJobGroup()
+    })
+    job.start()
+    val started = System.nanoTime() + 10e9.toLong
+    while (BlockingClient.started.get < 8 && System.nanoTime() < started) Thread.sleep(20)
+    assert(BlockingClient.started.get == 8)
+    sc.cancelJobGroup("llmmap-kill-spec")
+    job.join(20000)
+    assert(!job.isAlive && failure.get != null, "the job outlived its cancellation")
+    val deadline = System.nanoTime() + 5e9.toLong
+    while (BlockingClient.interrupted.get < 8 && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(BlockingClient.interrupted.get == 8)
+  }
+
   test("combine preserves chunk order with no separator") { // mapreduce.go:131-146
     val results = Seq((2L, "C"), (0L, "A"), (1L, "B")).toDF("chunk_id", "result")
     val combined = Combine.combineAll(results).as[String].head()
@@ -168,6 +241,50 @@ object CountingClient {
 final case class CountingClient(keyword: String) extends ModelClient {
   override def complete(sys: String, text: String): String = {
     CountingClient.calls.incrementAndGet()
+    KeywordFilterClient(keyword).complete(sys, text)
+  }
+}
+
+/** Every call waits (up to 30 s) until `n` calls have started, then
+  * answers "together". Once one call has timed out, every call answers
+  * "alone" at once, so serialized calls fail the spec in 30 s, not 8x.
+  */
+object LatchClient {
+  @volatile var latch = new java.util.concurrent.CountDownLatch(0)
+  @volatile var timedOut = false
+  def reset(n: Int): Unit = {
+    latch = new java.util.concurrent.CountDownLatch(n); timedOut = false
+  }
+}
+final case class LatchClient() extends ModelClient {
+  override def complete(sys: String, text: String): String = {
+    val l = LatchClient.latch
+    l.countDown()
+    if (!LatchClient.timedOut && l.await(30, java.util.concurrent.TimeUnit.SECONDS)) "together"
+    else { LatchClient.timedOut = true; "alone" }
+  }
+}
+
+/** Throws on the chunk equal to `poison`; every other call counts its
+  * start and sleeps 30 s unless interrupted, and counts the interrupt.
+  */
+object BlockingClient {
+  val started = new java.util.concurrent.atomic.AtomicLong(0)
+  val interrupted = new java.util.concurrent.atomic.AtomicLong(0)
+}
+final case class BlockingClient(poison: String) extends ModelClient {
+  override def complete(sys: String, text: String): String =
+    if (text == poison) throw new IllegalStateException("poisoned chunk")
+    else try { BlockingClient.started.incrementAndGet(); Thread.sleep(30000); text } catch {
+      case e: InterruptedException => BlockingClient.interrupted.incrementAndGet(); throw e
+    }
+}
+
+/** [[CountingClient]] that throws on chunks containing `poison`. */
+final case class PoisonClient(keyword: String, poison: String) extends ModelClient {
+  override def complete(sys: String, text: String): String = {
+    CountingClient.calls.incrementAndGet()
+    if (text.contains(poison)) throw new IllegalStateException(s"poisoned: $text")
     KeywordFilterClient(keyword).complete(sys, text)
   }
 }
@@ -189,6 +306,25 @@ class MemoCacheSpec extends AnyFunSuite {
     assert(CountingClient.calls.get() == 0, "cached run must not call the model")
     assert(r1 == r2)
     assert(r1 == Seq("alpha keep", "", "gamma keep"))
+  }
+
+  test("one failed chunk keeps the other N-1 results; the resume makes 1 call") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-memo5").toString + "/memo"
+    val chunks = (0L until 10L).map(i => (i, if (i == 7) s"c$i poison keep" else s"c$i keep"))
+      .toDF("chunk_id", "text")
+    CountingClient.reset()
+    val e = intercept[ChunkFailures] {
+      MemoCache.mapChunksWithMemo(chunks, PoisonClient("keep", "poison"), "p", "m", dir)
+    }
+    assert(e.chunkIds == Seq(7L))
+    assert(e.getMessage.contains("chunk_id 7") && e.getMessage.contains("poisoned: c7"))
+    assert(CountingClient.calls.get() == 10, "a failed call must not abort or retry the task")
+    assert(spark.read.parquet(dir).count() == 9)
+    CountingClient.reset()
+    val resumed = MemoCache.mapChunksWithMemo(chunks, CountingClient("keep"), "p", "m", dir)
+      .orderBy("chunk_id").select("result").as[String].collect().toSeq
+    assert(CountingClient.calls.get() == 1)
+    assert(resumed == chunks.orderBy("chunk_id").select("text").as[String].collect().toSeq)
   }
 
   test("changed prompt invalidates the memo (fixes reference hazard)") {
